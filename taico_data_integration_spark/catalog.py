@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .quoting import ident
+
 FIXTURE_TABLES = (
     "region",
     "nation",
@@ -66,13 +68,15 @@ _confs_ensured: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 def ensure_runtime_confs(spark: SparkSession) -> None:
     if spark in _confs_ensured:
         return
+    ok = True
     for k, v in RUNTIME_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
         except Exception:
-            pass
-    _confs_ensured.add(spark)
+            ok = False  # not marked ensured: the next call retries
+    if ok:
+        _confs_ensured.add(spark)
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts", dtype: str | None = None) -> DataFrame:
@@ -86,13 +90,11 @@ def normalize_event_ts(df: DataFrame, col: str = "ts", dtype: str | None = None)
     - timestamp: already the canonical type.
     LTZ is required downstream by withWatermark / unix_* and keeps batch and
     streaming reads of the same fixture type-identical."""
-    from pyspark.sql import functions as F
-
     # dtype hint avoids the per-call py4j schema fetch when the caller
     # already holds the (cached) schema — df.dtypes costs ~20 ms per load.
     t = dtype if dtype is not None else dict(df.dtypes).get(col)
     if t == "bigint":
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{ident(col)} div 1000")))
     elif t == "timestamp_ntz":
         df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
@@ -120,7 +122,8 @@ def normalize_event_ts(df: DataFrame, col: str = "ts", dtype: str | None = None)
 
 _SCAN_PARALLELIZE_MIN_BYTES = 256 * 1024  # below this, single-task compute is trivial
 
-_scan_stats_cache: dict[tuple[str, int], tuple[int, int] | None] = {}
+# path -> (mtime_ns, stats): one entry per path, a newer mtime replaces it
+_scan_stats_cache: dict[str, tuple[int, tuple[int, int] | None]] = {}
 
 
 def _local_scan_stats(path: str) -> tuple[int, int] | None:
@@ -128,16 +131,19 @@ def _local_scan_stats(path: str) -> tuple[int, int] | None:
     path is not local-filesystem-resolvable (object stores: stay untouched,
     those deployments size their files at write time)."""
     p = path[7:] if path.startswith("file://") else path
-    # Cache key includes the path's mtime so a fixture rewritten at the same
-    # path within one process re-derives its stats (ADVICE r12 #3 — stale
-    # stats could silently flip the fan-out decision in long-lived sessions).
+    # Cached with the path's mtime so a fixture rewritten at the same path
+    # within one process re-derives its stats (ADVICE r12 #3 — stale stats
+    # could silently flip the fan-out decision in long-lived sessions).
+    # Limitation: a directory's mtime changes only when its own entries are
+    # added, removed or renamed, so a file rewritten in place inside a
+    # SUBdirectory (e.g. a partition dir) keeps the old entry.
     try:
         mtime = os.stat(p).st_mtime_ns
     except OSError:
         mtime = -1
-    cache_key = (path, mtime)
-    if cache_key in _scan_stats_cache:
-        return _scan_stats_cache[cache_key]
+    hit = _scan_stats_cache.get(path)
+    if hit is not None and hit[0] == mtime:
+        return hit[1]
     stats: tuple[int, int] | None
     try:
         if os.path.isfile(p):
@@ -154,7 +160,7 @@ def _local_scan_stats(path: str) -> tuple[int, int] | None:
             stats = None
     except OSError:
         stats = None
-    _scan_stats_cache[cache_key] = stats
+    _scan_stats_cache[path] = (mtime, stats)
     return stats
 
 
@@ -213,10 +219,11 @@ _FAN_OUT_KEYS: dict[str, tuple[str, ...]] = {
 # inference (0.02 s) while still returning a FRESH relation per call (new
 # attribute ids — no self-join ambiguity, unlike caching the DataFrame
 # handle). This caches metadata only, exactly what a catalog/metastore
-# does — every query still scans the parquet data. mtime key: a fixture
-# rewritten at the same path re-infers (parquet writers create/delete files,
-# which touches the directory mtime).
-_schema_cache: dict[tuple[str, int], object] = {}
+# does — every query still scans the parquet data. Cached with the mtime: a
+# fixture rewritten at the same path re-infers (parquet writers create/delete
+# files, which touches the directory mtime) and replaces the path's entry.
+# Same subdirectory limitation as _local_scan_stats.
+_schema_cache: dict[str, tuple[int, object]] = {}
 
 
 def _cached_schema(spark: SparkSession, path: str):
@@ -225,11 +232,11 @@ def _cached_schema(spark: SparkSession, path: str):
         mtime = os.stat(p).st_mtime_ns
     except OSError:
         return None  # non-local path: let the reader infer
-    key = (path, mtime)
-    sch = _schema_cache.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _schema_cache[key] = sch
+    hit = _schema_cache.get(path)
+    if hit is not None and hit[0] == mtime:
+        return hit[1]
+    sch = spark.read.parquet(path).schema
+    _schema_cache[path] = (mtime, sch)
     return sch
 
 

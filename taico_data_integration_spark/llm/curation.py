@@ -2,11 +2,15 @@
 repetition scoring, benchmark-contamination checks, deterministic dataset
 splitting, and a composite quality-filter pass.
 
-All pure Column expressions (JVM-side, whole-stage-codegen friendly) — one
-scan per metric set, no Python in the hot path. Hashing is md5-based so the
-DuckDB oracles reproduce bit-for-bit, and so split assignment is stable
-across runs/cluster sizes (a reshuffle or executor loss never moves a
-document between train and test).
+JVM-side, whole-stage-codegen friendly — one scan per metric set, no Python
+in the hot path. Hashing is md5-based so the DuckDB oracles reproduce
+bit-for-bit, and so split assignment is stable across runs/cluster sizes (a
+reshuffle or executor loss never moves a document between train and test).
+
+The token-based scores follow the package's one expression form (llm.text
+module note): builders return Spark SQL strings quoted through
+quoting.ident/lit, and callers use selectExpr or F.expr. The PII and split
+helpers have no SQL copy and stay plain Column expressions.
 """
 
 from __future__ import annotations
@@ -14,8 +18,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..quoting import ident
 from .dedup import materialized_shingles
-from .text import detect_language, quality_score, tokens
+from .text import (
+    LANGS,
+    language_argmax_sql,
+    quality_sql,
+    quality_terms_sql,
+    stopword_hits_sql,
+    tokens_sql,
+)
 
 # PII patterns chosen for the RE2 ∩ java.util.regex common dialect (no
 # backrefs, no lookaround) so Spark and the DuckDB oracle agree exactly.
@@ -46,13 +58,18 @@ def redact_pii(col: Column | str) -> Column:
     return c
 
 
-def repetition_ratio(col: Column | str) -> Column:
-    """1 - |distinct tokens| / |tokens| in [0, 1) — the cheap intra-document
-    repetition signal used by corpus quality filters."""
-    toks = tokens(col)
-    n = F.size(toks).cast("double")
-    d = F.size(F.array_distinct(toks)).cast("double")
-    return F.round(F.lit(1.0) - d / F.greatest(n, F.lit(1.0)), 6)
+def repetition_sql(n_tok: str, n_distinct: str) -> str:
+    """1 - |distinct tokens| / |tokens| in [0, 1) over token-count
+    expressions — the cheap intra-document repetition signal used by corpus
+    quality filters."""
+    return (
+        f"round(1.0D - CAST({n_distinct} AS DOUBLE) / greatest(CAST({n_tok} AS DOUBLE), 1.0D), 6)"
+    )
+
+
+def repetition_ratio_sql(col: str) -> str:
+    toks = tokens_sql(col)
+    return repetition_sql(f"size({toks})", f"size(array_distinct({toks}))")
 
 
 def split_bucket(id_col: Column | str, buckets: int = 100) -> Column:
@@ -182,36 +199,24 @@ def curation_flags(
     tree once per reference (~30x for the language argmax + flag columns),
     and Catalyst's subexpression elimination does not hoist subtrees out of
     CASE WHEN branches. Results are bit-identical (same exprs, same fold
-    order); only the evaluation count changes.
-
-    r13: the projections are SQL-string twins of the previous Column forms
-    (llm.text module note on py4j plan-build cost) — the `D` suffix keeps
-    every float literal a DOUBLE exactly like the old F.lit(...) nodes."""
-    from .text import language_argmax_sql, stopword_hits_sql, tokens_sql
-
-    langs = ("en", "de", "es", "fr")
-    idq = f"`{id_col}`"
-    base = df.selectExpr(
-        idq, f"`{text_col}` AS __t", f"{tokens_sql(text_col)} AS __toks"
-    )
+    order); only the evaluation count changes. The top projection applies
+    the same builders as the single-expression forms (quality_score_sql,
+    repetition_ratio_sql, detect_language_sql) to the staged columns."""
+    idq = ident(id_col)
+    base = df.selectExpr(idq, f"{ident(text_col)} AS __t", f"{tokens_sql(text_col)} AS __toks")
+    terms = quality_terms_sql("__t", "__toks")
     stats = base.selectExpr(
         idq,
-        "CAST(size(__toks) AS BIGINT) AS __n_tok",
+        f"{terms['n_tok']} AS __n_tok",
         "CAST(size(array_distinct(__toks)) AS BIGINT) AS __n_dist",
-        *[f"{stopword_hits_sql('__toks', lang)} AS __hits_{lang}" for lang in langs],
-        "CAST(regexp_count(__t, '[A-Za-z]') AS DOUBLE) AS __alpha",
-        "CAST(length(__t) AS DOUBLE) AS __len",
+        *[f"{stopword_hits_sql('__toks', lang)} AS __hits_{lang}" for lang in LANGS],
+        f"{terms['n_alpha']} AS __alpha",
+        f"{terms['n_chars']} AS __len",
     )
-    # cheap scalar math over the staged stats — duplication-free to inline;
-    # each formula matches the Column-API twin (repetition_ratio,
-    # quality_score, detect_language) term for term.
-    n_tok_d = "CAST(__n_tok AS DOUBLE)"
-    rep = f"round(1.0D - CAST(__n_dist AS DOUBLE) / greatest({n_tok_d}, 1.0D), 6)"
-    stop_ratio = f"CAST(__hits_en AS DOUBLE) / greatest({n_tok_d}, 1.0D)"
-    alpha_ratio = "__alpha / greatest(__len, 1.0D)"
-    len_sat = f"least({n_tok_d} / 100.0D, 1.0D)"
-    qual = f"round(0.4D * ({stop_ratio}) + 0.3D * ({alpha_ratio}) + 0.3D * ({len_sat}), 6)"
-    lang = language_argmax_sql({l: f"__hits_{l}" for l in langs}, langs)
+    # cheap scalar math over the staged stats — duplication-free to inline
+    rep = repetition_sql("__n_tok", "__n_dist")
+    qual = quality_sql("__n_tok", "__hits_en", "__alpha", "__len")
+    lang = language_argmax_sql({l: f"__hits_{l}" for l in LANGS})
     out = stats.selectExpr(
         idq,
         "__n_tok AS n_tokens",

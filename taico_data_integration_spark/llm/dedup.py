@@ -8,56 +8,44 @@ Scale design:
 - n-gram Jaccard verifies candidates via an inverted-index self-join on
   shingles (pairs sharing >= 1 shingle), again no cross join.
 - All hashing is md5-based so DuckDB oracles can reproduce bit-for-bit.
+- `minhash_signatures` + `lsh_band_keys` (explode/groupBy) are the slow
+  reference form of `minhash_band_keys_fast`; a test pins their equality.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import normalized_text
+from ..quoting import ident, lit
+# normalized_text is re-exported: the benchmark imports it from here.
+from .text import fingerprint_sql, normalized_text, tokens_sql  # noqa: F401
 
 HEX = "0123456789abcdef"
 
-# Driver-side plan-construction cost is real bench time (guide §7.3): the
-# Column-API forms of the hot expression stacks below cost THOUSANDS of
-# py4j round trips per query build (measured r13: simhash 4263 calls
-# ~0.56 s, lsh pipeline 3062 calls ~0.73 s — ~100% of DataFrame-build
-# time was py4j socket waits). Building the same expressions as ONE SQL
-# string via selectExpr is a single round trip + a JVM-side parse, and
-# yields the IDENTICAL analyzed tree (oracle value-hash parity is the
-# proof). The SQL strings below are term-for-term twins of the previous
-# Column code, kept in comments where the mapping is not obvious.
+# Driver-side plan-construction cost is real bench time (guide §7.3): built
+# with the Column API, the hot stacks below cost THOUSANDS of py4j round
+# trips per query build (measured r13: simhash 4263 calls ~0.56 s, lsh
+# pipeline 3062 calls ~0.73 s). So they follow the package's one expression
+# form (llm.text module note): SQL strings from builders, quoted through
+# quoting.ident/lit, passed to selectExpr — one round trip and a JVM-side
+# parse per projection.
 
 
-def _norm_sql(col: str) -> str:
-    """SQL twin of text.normalized_text: lower + trim + collapse whitespace."""
-    return f"regexp_replace(lower(trim(`{col}`)), '\\\\s+', ' ')"
+def minhash_sql(seed: int) -> str:
+    """One MinHash component: min over the ``__sh`` shingle array of
+    md5('<seed>:<shingle>'). Hex-string min == numeric min of the 128-bit
+    value, and is reproducible in any engine with md5."""
+    return f"array_min(transform(__sh, s -> md5(concat_ws(':', {lit(str(seed))}, s))))"
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: one representative (min id) per identical normalized text."""
     return (
-        df.select(F.col(id_col), F.md5(normalized_text(text_col)).alias("fingerprint"))
+        df.selectExpr(ident(id_col), f"{fingerprint_sql(text_col)} AS fingerprint")
         .groupBy("fingerprint")
         .agg(F.min(id_col).alias("rep_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
-
-
-def shingle_array(text_col: str = "text", k: int = 3) -> Column:
-    """Distinct word k-shingles of a document as an array column.
-
-    Prefer `with_shingles` in pipelines: referencing this expression's
-    internal token split from inside the transform lambda re-evaluates the
-    regex tokenization per element_at (~3k shingle-lookups per doc), which
-    is a ~25x slowdown. `with_shingles` stages tokens behind an exchange so
-    they are computed once per row."""
-    toks = F.split(normalized_text(text_col), " ")
-    idx = F.sequence(F.lit(0), F.size(toks) - k)
-    shingles = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(k)])
-    )
-    return F.when(F.size(toks) >= k, F.array_distinct(shingles))
 
 
 def with_shingles(
@@ -95,21 +83,16 @@ def with_shingles(
         staged = staged.repartition(
             spark.sparkContext.defaultParallelism, F.xxhash64(F.col(id_col))
         )
-    # SQL-string twin of the previous Column code (see module note on py4j
-    # build cost): split(normalized_text) -> k-gram transform over a 0-based
-    # sequence -> array_distinct.
-    keep = [f"`{c}`" for c in keep_cols]
-    toks = staged.selectExpr(
-        f"`{id_col}`", *keep, f"split({_norm_sql('__text')}, ' ') AS __toks"
-    )
+    # split(normalized text) -> k-gram transform over a 0-based sequence ->
+    # array_distinct
+    idq, keep = ident(id_col), [ident(c) for c in keep_cols]
+    toks = staged.selectExpr(idq, *keep, f"{tokens_sql('__text')} AS __toks")
     elems = ", ".join(f"element_at(__toks, i + {j + 1})" for j in range(k))
     sh = (
         f"array_distinct(transform(sequence(0, size(__toks) - {k}), "
         f"i -> concat_ws(' ', {elems})))"
     )
-    return toks.where(f"size(__toks) >= {k}").selectExpr(
-        f"`{id_col}`", *keep, f"{sh} AS __sh"
-    )
+    return toks.where(f"size(__toks) >= {k}").selectExpr(idq, *keep, f"{sh} AS __sh")
 
 
 def minhash_band_keys_fast(
@@ -133,15 +116,10 @@ def minhash_band_keys_fast(
     """
     base = shingled if shingled is not None else with_shingles(df, text_col, id_col, k)
 
-    # SQL-string twins (module note): per seed,
-    # array_min(transform(__sh, s -> md5('<seed>:' || s))) exactly as the
-    # previous unary-lambda Column form; band key = md5 of the '|'-joined
-    # band rows with a CAST(b AS BIGINT) band id.
-    mins = [
-        f"array_min(transform(__sh, s -> md5(concat_ws(':', '{i}', s)))) AS mh{i}"
-        for i in range(num_hashes)
-    ]
-    sigs = base.selectExpr(f"`{id_col}`", *mins)
+    # band key = md5 of the '|'-joined band rows with a CAST(b AS BIGINT)
+    # band id
+    idq = ident(id_col)
+    sigs = base.selectExpr(idq, *[f"{minhash_sql(i)} AS mh{i}" for i in range(num_hashes)])
     band_rows = []
     for b in range(bands):
         parts = ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
@@ -149,9 +127,9 @@ def minhash_band_keys_fast(
             f"struct(CAST({b} AS BIGINT) AS band_id, "
             f"md5(concat_ws('|', {parts})) AS band_key)"
         )
-    return sigs.selectExpr(
-        f"`{id_col}`", f"explode(array({', '.join(band_rows)})) AS b"
-    ).selectExpr(f"`{id_col}`", "b.band_id AS band_id", "b.band_key AS band_key")
+    return sigs.selectExpr(idq, f"explode(array({', '.join(band_rows)})) AS b").selectExpr(
+        idq, "b.band_id AS band_id", "b.band_key AS band_key"
+    )
 
 
 def materialized_shingles(
@@ -242,7 +220,7 @@ def jaccard_pairs(
     """n-gram Jaccard similarity for every doc pair sharing a shingle
     (inverted-index self-join). Returns (doc_a, doc_b, common, jaccard).
     Pass `counts` (id, n_sh) to skip the per-doc counting shuffle (cheap to
-    derive as size(shingle_array) in the same scan that built shingles)."""
+    derive as size(__sh) in the same scan that built shingles)."""
     if counts is None:
         counts = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     # Partition the inverted index by shingle ONCE: both self-join sides
@@ -302,20 +280,18 @@ def simhash_bits(
     upstream that deduplicates ids; pre-aggregate text per id first if
     duplicates are possible).
     """
-    # SQL-string twins (module note): each bit's weight is the integer HOF
-    # fold aggregate(__hs, 0, (acc, h) -> acc + CASE parity(nibble b) ...)
-    # exactly as the previous binary-lambda Column form; the per-bit CASE >
-    # 0 chars concat into the signature in one projection (CollapseProject
-    # merged the old two-projection form into the same tree).
+    # Each bit's weight is the integer HOF fold
+    # aggregate(__hs, 0, (acc, h) -> acc + CASE parity(nibble b) ...); the
+    # per-bit CASE > 0 chars concat into the signature in one projection.
+    idq = ident(id_col)
     hashed = df.selectExpr(
-        f"`{id_col}`",
-        f"transform(array_distinct(split({_norm_sql(text_col)}, ' ')), t -> md5(t)) AS __hs",
+        idq, f"transform(array_distinct({tokens_sql(text_col)}), t -> md5(t)) AS __hs"
     )
 
     def _weight(b: int) -> str:
         return (
             "aggregate(__hs, 0, (acc, h) -> acc + (CASE WHEN "
-            f"(instr('{HEX}', substring(h, {b + 1}, 1)) - 1) % 2 = 1 "
+            f"(instr({lit(HEX)}, substring(h, {b + 1}, 1)) - 1) % 2 = 1 "
             "THEN 1 ELSE -1 END))"
         )
 
@@ -324,9 +300,7 @@ def simhash_bits(
     )
     # NULL text produced zero exploded rows (doc absent) in the aggregation
     # form; the null-array filter preserves that contract.
-    return hashed.where("__hs IS NOT NULL").selectExpr(
-        f"`{id_col}`", f"concat({bit_chars}) AS simhash"
-    )
+    return hashed.where("__hs IS NOT NULL").selectExpr(idq, f"concat({bit_chars}) AS simhash")
 
 
 def simhash_hamming_pairs(sim: DataFrame, id_col: str = "doc_id", max_hamming: int = 3, bits: int = 16) -> DataFrame:

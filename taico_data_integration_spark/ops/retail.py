@@ -10,6 +10,11 @@ Hash-parity note: UnitPrice is DECIMAL(18,2) (not double) because the dbt
 surrogate keys stringify it — decimal->string rendering agrees across
 engines, double->string does not (Java 17 Double.toString is not
 shortest-form).
+
+Expressions follow the package's one form (llm.text module note): SQL
+strings from builders, quoted through quoting.ident/lit, applied with
+selectExpr — dims and fact build their surrogate keys from the same
+``surrogate_key_sql``.
 """
 
 from __future__ import annotations
@@ -18,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .transforms import dual_format_timestamp, surrogate_key, surrogate_key_sql
+from ..quoting import ident
+from .transforms import dual_format_timestamp_sql, surrogate_key_sql
 
 
 def raw_invoices_from_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,9 +40,7 @@ def raw_invoices_from_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     p = load_table(spark, sf_dir, "part")
-    # SQL-string twins of the previous Column stack (r13 plan-build cost —
-    # see llm.text module note): identical date-string synthesis and
-    # decimal math, one selectExpr round trip.
+    # one selectExpr round trip for the date-string synthesis and decimal math
     mm = "lpad(CAST(month(o_orderdate) AS STRING), 2, '0')"
     dd = "lpad(CAST(dayofmonth(o_orderdate) AS STRING), 2, '0')"
     yyyy = "CAST(year(o_orderdate) AS STRING)"
@@ -85,10 +89,10 @@ def dim_customer(raw: DataFrame, country: DataFrame) -> DataFrame:
     (CustomerID, Country), LEFT JOIN country lookup, CustomerID NOT NULL."""
     return (
         raw.where(F.col("CustomerID").isNotNull())
-        .select(
-            surrogate_key("CustomerID", "Country").alias("customer_id"),
-            F.col("CustomerID").alias("customer_code"),
-            F.col("Country").alias("country"),
+        .selectExpr(
+            f"{surrogate_key_sql('CustomerID', 'Country')} AS customer_id",
+            "CustomerID AS customer_code",
+            "Country AS country",
         )
         .distinct()
         .join(F.broadcast(country), F.col("country") == country.nicename, "left")
@@ -101,14 +105,14 @@ def dim_product(raw: DataFrame) -> DataFrame:
     WHERE StockCode IS NOT NULL AND UnitPrice > 0."""
     return (
         raw.where(F.col("StockCode").isNotNull() & (F.col("UnitPrice") > 0))
-        .select(
-            surrogate_key("StockCode", "Description", "UnitPrice").alias("product_id"),
-            F.col("StockCode").alias("stock_code"),
-            F.col("Description").alias("description"),
+        .selectExpr(
+            f"{surrogate_key_sql('StockCode', 'Description', 'UnitPrice')} AS product_id",
+            "StockCode AS stock_code",
+            "Description AS description",
             # Output edge: DECIMAL stays internal (surrogate-key stringify
             # needs it); the emitted column is DOUBLE — the only output type
             # class proven green through the driver's value hash.
-            F.col("UnitPrice").cast("double").alias("price"),
+            "CAST(UnitPrice AS DOUBLE) AS price",
         )
         .distinct()
     )
@@ -122,10 +126,10 @@ def dim_datetime(raw: DataFrame) -> DataFrame:
         raw.where(F.col("InvoiceDate").isNotNull())
         .select(F.col("InvoiceDate").alias("datetime_raw"))
         .distinct()
-        .select(
-            surrogate_key("datetime_raw").alias("datetime_id"),
-            F.col("datetime_raw"),
-            dual_format_timestamp(F.col("datetime_raw")).alias("datetime"),
+        .selectExpr(
+            f"{surrogate_key_sql('datetime_raw')} AS datetime_id",
+            "datetime_raw",
+            f"{dual_format_timestamp_sql(ident('datetime_raw'))} AS `datetime`",
         )
         .withColumn("year", F.year("datetime").cast("bigint"))
         .withColumn("month", F.month("datetime").cast("bigint"))

@@ -1,15 +1,23 @@
 """Scalar/row-level transform building blocks.
 
-Column-expression ports of the reference's dbt-SQL idioms (SURVEY.md §2.8):
-comma-decimal parsing, dbt_utils surrogate keys, normalized-key fuzzy joins,
-canonical-name mapping, dual-format datetime parsing. All pure Column
-expressions — JVM-side, whole-stage-codegen friendly; no UDFs.
+Ports of the reference's dbt-SQL idioms (SURVEY.md §2.8): comma-decimal
+parsing, dbt_utils surrogate keys, normalized-key fuzzy joins,
+canonical-name mapping, dual-format datetime parsing. JVM-side,
+whole-stage-codegen friendly; no UDFs.
+
+The surrogate key and the dual-format timestamp follow the package's one
+expression form (llm.text module note): a ``*_sql`` builder returns a Spark
+SQL string quoted through quoting.ident/lit and callers use it in
+selectExpr or F.expr. The other helpers have no SQL copy and stay plain
+Column expressions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..quoting import ident, lit
 
 # dbt_utils 1.1.1 generate_surrogate_key null placeholder (SURVEY.md §1.3).
 SURROGATE_NULL = "_dbt_utils_surrogate_key_null_"
@@ -25,26 +33,16 @@ def comma_decimal(col: Column | str, out_type: str = "double") -> Column:
     return F.replace(c, F.lit(","), F.lit(".")).cast(out_type)
 
 
-def surrogate_key(*cols: Column | str) -> Column:
-    """dbt_utils.generate_surrogate_key parity: md5 of '-'-joined,
-    null-coalesced string casts (include/dbt/models/transform/dim_customer.sql:6).
+def surrogate_key_sql(*cols: str) -> str:
+    """dbt_utils.generate_surrogate_key parity over column names: md5 of
+    '-'-joined, null-coalesced string casts
+    (include/dbt/models/transform/dim_customer.sql:6).
 
     concat_ws would *skip* nulls (wrong); dbt coalesces each field to the
     placeholder, so we do too.
     """
-    parts = [
-        F.coalesce((F.col(c) if isinstance(c, str) else c).cast("string"), F.lit(SURROGATE_NULL))
-        for c in cols
-    ]
-    return F.md5(F.concat_ws("-", *parts))
-
-
-def surrogate_key_sql(*cols: str) -> str:
-    """SQL-string twin of surrogate_key for selectExpr call sites (r13
-    plan-build cost — see llm.text module note): identical md5/concat_ws/
-    coalesce tree, one parse instead of ~25 py4j calls per key."""
     parts = ", ".join(
-        f"coalesce(CAST(`{c}` AS STRING), '{SURROGATE_NULL}')" for c in cols
+        f"coalesce(CAST({ident(c)} AS STRING), {lit(SURROGATE_NULL)})" for c in cols
     )
     return f"md5(concat_ws('-', {parts}))"
 
@@ -72,14 +70,15 @@ def canonical_map(col: Column | str, mapping: dict[str, str]) -> Column:
     return c if expr is None else expr.otherwise(c)
 
 
-def dual_format_timestamp(col: Column | str, long_fmt: str = "M/d/yyyy H:mm", short_fmt: str = "M/d/yy H:mm", length_threshold: int = 16) -> Column:
+def dual_format_timestamp_sql(expr: str, long_fmt: str = "M/d/yyyy H:mm", short_fmt: str = "M/d/yy H:mm", length_threshold: int = 16) -> str:
     """Ambiguous datetime strings parsed by length
     (include/dbt/models/transform/dim_datetime.sql:7-16): 16-char strings are
     '%m/%d/%Y %H:%M', shorter are '%m/%d/%y %H:%M'. try_to_timestamp keeps
-    NULL-on-garbage under ANSI (SURVEY.md §7.4 hazard 5)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.length(c) >= length_threshold, F.try_to_timestamp(c, F.lit(long_fmt))).otherwise(
-        F.try_to_timestamp(c, F.lit(short_fmt))
+    NULL-on-garbage under ANSI (SURVEY.md §7.4 hazard 5). ``expr`` is SQL
+    text (``ident(name)`` for a plain column)."""
+    return (
+        f"CASE WHEN length({expr}) >= {length_threshold} THEN try_to_timestamp({expr}, {lit(long_fmt)}) "
+        f"ELSE try_to_timestamp({expr}, {lit(short_fmt)}) END"
     )
 
 

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm.curation import curation_flags, dataset_split
-from ..llm.dedup import materialized_shingles, minhash_band_keys_fast, normalized_text
+from ..llm.dedup import materialized_shingles, minhash_band_keys_fast
 from ..llm.similarity import (
     _to_double,
     dot,
@@ -43,6 +43,7 @@ from ..llm.similarity import (
     embedding_neardup_pairs_blas,
     random_hyperplanes,
 )
+from ..llm.text import fingerprint_sql
 from ..ops.formats import TableFormat
 from .callbacks import PipelineCallbacks
 
@@ -229,12 +230,12 @@ def ingest_batch(
     n_in = batch.count()
 
     # 1. exact dedup within the batch AND against the stored corpus
-    batch_fp = batch.withColumn("__fp", F.md5(normalized_text("text")))
+    batch_fp = batch.selectExpr("*", f"{fingerprint_sql('text')} AS __fp")
     keepers = batch_fp.groupBy("__fp").agg(F.min("doc_id").alias("doc_id"))
     batch_exact = batch_fp.join(keepers, ["__fp", "doc_id"], "left_semi")
     if store.exists(CORPUS_TABLE):
         corpus = store.read(CORPUS_TABLE)
-        corpus_fps = corpus.select(F.md5(normalized_text("text")).alias("__fp")).distinct()
+        corpus_fps = corpus.selectExpr(f"{fingerprint_sql('text')} AS __fp").distinct()
         batch_exact = batch_exact.join(corpus_fps, "__fp", "left_anti")
     batch_exact = batch_exact.drop("__fp").localCheckpoint()
     n_batch_exact = batch_exact.count()

@@ -16,9 +16,9 @@ from ..ops.dims import distinct_extract, multi_distinct
 from ..ops.transforms import (
     canonical_map,
     comma_decimal,
-    dual_format_timestamp,
+    dual_format_timestamp_sql,
     normalize_name,
-    surrogate_key,
+    surrogate_key_sql,
 )
 from ._util import T, as_double, dec2, one
 
@@ -325,10 +325,10 @@ GROUP BY 1
 
 def surrogate_customer_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer")
-    return c.select(
+    return c.selectExpr(
         "c_custkey",
-        surrogate_key("c_custkey", "c_nationkey").alias("customer_sk"),
-        surrogate_key("c_name", "c_mktsegment").alias("name_sk"),
+        f"{surrogate_key_sql('c_custkey', 'c_nationkey')} AS customer_sk",
+        f"{surrogate_key_sql('c_name', 'c_mktsegment')} AS name_sk",
     )
 
 
@@ -702,21 +702,20 @@ FROM lineitem
 
 def dual_format_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
-    mm = F.lpad(F.month("o_orderdate").cast("string"), 2, "0")
-    dd = F.lpad(F.dayofmonth("o_orderdate").cast("string"), 2, "0")
-    yyyy = F.year("o_orderdate").cast("string")
-    yy = F.lpad((F.year("o_orderdate") % 100).cast("string"), 2, "0")
-    long_str = F.concat(mm, F.lit("/"), dd, F.lit("/"), yyyy, F.lit(" 08:30"))
-    short_str = F.concat(mm, F.lit("/"), dd, F.lit("/"), yy, F.lit(" 08:30"))
+    mm = "lpad(CAST(month(o_orderdate) AS STRING), 2, '0')"
+    dd = "lpad(CAST(dayofmonth(o_orderdate) AS STRING), 2, '0')"
+    yyyy = "CAST(year(o_orderdate) AS STRING)"
+    yy = "lpad(CAST(year(o_orderdate) % 100 AS STRING), 2, '0')"
+    long_str = f"concat({mm}, '/', {dd}, '/', {yyyy}, ' 08:30')"
+    short_str = f"concat({mm}, '/', {dd}, '/', {yy}, ' 08:30')"
     # 2-digit years only for >= 2000: Spark 'yy' pivots to 2000-2099 while
     # POSIX %y pivots at 69 — keep to the agreeing range (SURVEY.md §7.4).
-    raw = F.when(
-        (F.col("o_orderkey") % 2 == 0) & (F.year("o_orderdate") >= 2000), short_str
-    ).otherwise(long_str)
-    return o.select(
-        "o_orderkey",
-        raw.alias("raw_dt"),
-        dual_format_timestamp(raw).alias("parsed_ts"),
+    raw = (
+        f"CASE WHEN (o_orderkey % 2 = 0) AND (year(o_orderdate) >= 2000) "
+        f"THEN {short_str} ELSE {long_str} END"
+    )
+    return o.selectExpr(
+        "o_orderkey", f"{raw} AS raw_dt", f"{dual_format_timestamp_sql(raw)} AS parsed_ts"
     )
 
 

@@ -22,8 +22,9 @@ from ..llm.curation import (
     curation_flags,
     dataset_split,
     redact_pii,
-    repetition_ratio,
+    repetition_ratio_sql,
 )
+from ..llm.text import quality_score_sql, token_count_sql, tokens_sql
 from ._util import T
 from .llm import _NORM, _hits_sql
 
@@ -83,14 +84,12 @@ FROM p
 
 def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    from ..llm.text import tokens
-
-    toks = tokens("text")
-    return d.select(
+    toks = tokens_sql("text")
+    return d.selectExpr(
         "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("bigint").alias("n_distinct"),
-        repetition_ratio("text").alias("repetition"),
+        f"CAST(size({toks}) AS BIGINT) AS n_tokens",
+        f"CAST(size(array_distinct({toks})) AS BIGINT) AS n_distinct",
+        f"{repetition_ratio_sql('text')} AS repetition",
     )
 
 
@@ -202,13 +201,12 @@ FROM flagged
 
 def token_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.curation import pack_into_shards
-    from ..llm.text import whitespace_token_count
 
     d = T(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         dataset_split("doc_id").alias("split"),
-        whitespace_token_count("text").alias("n_tokens"),
+        F.expr(token_count_sql("text")).alias("n_tokens"),
     )
     return pack_into_shards(d, budget=2000)
 
@@ -242,10 +240,9 @@ FROM base
 
 def quality_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.curation import quality_quota_sample
-    from ..llm.text import quality_score
 
-    d = T(spark, sf_dir, "documents").select(
-        "doc_id", "source", quality_score("text").alias("quality")
+    d = T(spark, sf_dir, "documents").selectExpr(
+        "doc_id", "source", f"{quality_score_sql('text')} AS quality"
     )
     return quality_quota_sample(d, quota=10)
 

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..quoting import ident
 from ._util import T, as_double, dec2
 
 # ---------------------------------------------------------------------------
@@ -823,13 +824,14 @@ def entity_resolution_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 def er_deletion_variants(df: DataFrame, col: str, max_len: int = 64) -> DataFrame:
     """All single-character-deletion variants of `col` (FastSS k=1 index):
     (col, del_variant) with one row per deletion position, deduplicated."""
+    c = ident(col)
     return (
         df.select(col, F.explode(F.sequence(F.lit(1), F.least(F.length(col), F.lit(max_len)))).alias("__i"))
         .select(
             col,
             F.concat(
-                F.expr(f"substring({col}, 1, __i - 1)"),
-                F.expr(f"substring({col}, __i + 1, length({col}))"),
+                F.expr(f"substring({c}, 1, __i - 1)"),
+                F.expr(f"substring({c}, __i + 1, length({c}))"),
             ).alias("del_variant"),
         )
         .dropDuplicates([col, "del_variant"])

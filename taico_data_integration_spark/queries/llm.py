@@ -15,6 +15,7 @@ from ..llm.dedup import (
     lsh_candidate_pairs,
     materialized_shingles,
     minhash_band_keys_fast,
+    minhash_sql,
     simhash_bits,
 )
 from ..llm.multimodal import (
@@ -30,13 +31,12 @@ from ..llm.multimodal import (
 from ..llm.similarity import cosine_topk_bruteforce, cosine_topk_ivf, embedding_neardup_pairs
 from ..llm.text import (
     STOPWORDS,
-    bpe_ish_token_count,
-    detect_language,
-    fingerprint,
-    punct_count,
-    quality_score,
-    tokens,
-    whitespace_token_count,
+    bpe_token_count_sql,
+    fingerprint_sql,
+    punct_count_sql,
+    quality_score_sql,
+    token_count_sql,
+    tokens_sql,
 )
 from ._util import T
 
@@ -222,12 +222,7 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
     base = materialized_shingles(d, "text", "doc_id", 3)
 
-    # SQL-string twin of the per-seed Column lambdas (see llm.dedup module
-    # note on py4j plan-build cost) — identical md5 math.
-    mh_sql = ", ".join(
-        f"array_min(transform(__sh, s -> md5(concat_ws(':', '{i}', s))))"
-        for i in range(16)
-    )
+    mh_sql = ", ".join(minhash_sql(i) for i in range(16))
     sigs = base.selectExpr("doc_id", f"array({mh_sql}) AS sig", "__sh")
     bands = minhash_band_keys_fast(d, shingled=base)
     cands = lsh_candidate_pairs(bands)
@@ -843,11 +838,11 @@ QUALIFY rank <= 5
 
 def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    return d.select(
+    return d.selectExpr(
         "doc_id",
-        whitespace_token_count("text").alias("n_tokens"),
-        bpe_ish_token_count("text").alias("n_bpe_tokens"),
-        punct_count("text").alias("n_punct"),
+        f"{token_count_sql('text')} AS n_tokens",
+        f"{bpe_token_count_sql('text')} AS n_bpe_tokens",
+        f"{punct_count_sql('text')} AS n_punct",
     )
 
 
@@ -865,7 +860,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = T(spark, sf_dir, "documents", fan_out=True)
     # staged form: one tokenization per row instead of one per hit reference
-    # (~28x for 4 languages); results identical to detect_language
+    # (~28x for 4 languages); results identical to detect_language_sql
     return with_language(d, "text", keep_cols=("doc_id", "lang"))
 
 
@@ -895,7 +890,7 @@ FROM h
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    return d.select("doc_id", quality_score("text").alias("quality"))
+    return d.selectExpr("doc_id", f"{quality_score_sql('text')} AS quality")
 
 
 def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -908,9 +903,7 @@ def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = T(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens("text")).alias("token")).where(
-        F.col("token") != ""
-    )
+    toks = d.selectExpr("doc_id", f"explode({tokens_sql('text')}) AS token").where("token != ''")
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = (
         toks.select("doc_id", "token").distinct().groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -939,12 +932,10 @@ def doc_chunking(spark: SparkSession, sf_dir: str, window: int = 64, stride: int
     shuffle at all: chunks = explode(sequence) over each doc's token array.
     Chunk i covers tokens [i*stride, i*stride + window)."""
     d = T(spark, sf_dir, "documents")
-    toks = tokens("text")
-    max_i = F.floor((F.size(toks) - F.lit(1)) / F.lit(stride)).cast("int")
-    chunked = d.select(
-        "doc_id",
-        toks.alias("__toks"),
-        F.explode(F.sequence(F.lit(0), F.greatest(max_i, F.lit(0)))).alias("chunk_id"),
+    toks = tokens_sql("text")
+    max_i = f"CAST(floor((size({toks}) - 1) / {stride}) AS INT)"
+    chunked = d.selectExpr(
+        "doc_id", f"{toks} AS __toks", f"explode(sequence(0, greatest({max_i}, 0))) AS chunk_id"
     )
     sliced = F.slice(F.col("__toks"), F.col("chunk_id") * stride + 1, window)
     return chunked.select(
@@ -1007,7 +998,7 @@ FROM documents
 
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    return d.select("doc_id", fingerprint("text").alias("fingerprint"))
+    return d.selectExpr("doc_id", f"{fingerprint_sql('text')} AS fingerprint")
 
 
 FINGERPRINT_SQL = f"""
@@ -1020,9 +1011,7 @@ SELECT doc_id, md5({_NORM}) AS fingerprint FROM documents
 
 def token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ")).alias("token")
-    )
+    toks = d.selectExpr("doc_id", f"explode({tokens_sql('text')}) AS token")
     return toks.groupBy("token").agg(
         F.count(F.lit(1)).alias("tf"), F.countDistinct("doc_id").alias("df")
     )
@@ -1040,9 +1029,8 @@ GROUP BY 1
 
 def doc_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    n = whitespace_token_count("text")
     return (
-        d.select("lang", n.alias("n_tok"))
+        d.selectExpr("lang", f"{token_count_sql('text')} AS n_tok")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

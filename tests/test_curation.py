@@ -11,7 +11,7 @@ from taico_data_integration_spark.llm.curation import (
     curation_flags,
     dataset_split,
     redact_pii,
-    repetition_ratio,
+    repetition_ratio_sql,
     split_bucket,
 )
 
@@ -44,7 +44,7 @@ def test_repetition_ratio_bounds(spark):
     df = spark.createDataFrame(
         [(1, "a a a a"), (2, "a b c d"), (3, "x")], ["id", "t"]
     )
-    rows = {r["id"]: r["rep"] for r in df.select("id", repetition_ratio("t").alias("rep")).collect()}
+    rows = {r["id"]: r["rep"] for r in df.selectExpr("id", f"{repetition_ratio_sql('t')} AS rep").collect()}
     assert rows[1] == 0.75  # 1 distinct of 4
     assert rows[2] == 0.0
     assert rows[3] == 0.0

@@ -12,6 +12,7 @@ from taico_data_integration_spark.llm.dedup import (
     jaccard_pairs,
     lsh_band_keys,
     lsh_candidate_pairs,
+    minhash_band_keys_fast,
     minhash_signatures,
     simhash_bits,
     simhash_hamming_pairs,
@@ -27,7 +28,7 @@ from taico_data_integration_spark.llm.similarity import (
     cosine_topk_lsh,
     embedding_neardup_pairs,
 )
-from taico_data_integration_spark.llm.text import detect_language, quality_score
+from taico_data_integration_spark.llm.text import detect_language_sql, quality_score_sql
 
 BASE = "the quick brown fox jumps over the lazy dog again and again today"
 NEAR = "the quick brown fox jumps over the lazy cat again and again today"
@@ -61,6 +62,33 @@ def test_minhash_lsh_candidates_include_duplicates(spark):
     cands = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(bands).collect()}
     assert (1, 2) in cands  # identical docs always collide in every band
     assert (1, 4) not in cands
+
+
+def _band_rows(df):
+    return sorted((r.doc_id, r.band_id, r.band_key) for r in df.collect())
+
+
+@pytest.mark.parametrize("corpus", ["planted", "seeded"])
+def test_minhash_band_keys_fast_equals_reference_form(spark, corpus):
+    """The one-projection HOF signature path equals the explode/groupBy
+    reference (word_shingles -> minhash_signatures -> lsh_band_keys)."""
+    import random
+
+    if corpus == "planted":
+        docs = _docs(spark)
+    else:
+        rng = random.Random(20240517)
+        vocab = [f"w{i}" for i in range(40)]
+        rows = [
+            Row(doc_id=i, text=" ".join(rng.choice(vocab) for _ in range(rng.randint(0, 30))))
+            for i in range(60)
+        ]
+        docs = spark.createDataFrame(rows)
+    ref = lsh_band_keys(minhash_signatures(word_shingles(docs, k=3), num_hashes=16), bands=4, rows_per_band=4)
+    fast = minhash_band_keys_fast(docs, k=3, num_hashes=16, bands=4, rows_per_band=4)
+    expected = _band_rows(ref)
+    assert expected  # the corpus has documents with >= k tokens
+    assert _band_rows(fast) == expected
 
 
 def test_simhash_distance_orders_similarity(spark):
@@ -229,9 +257,9 @@ def test_language_and_quality(spark):
             Row(doc_id=3, text="xyzzy plugh qwerty"),
         ]
     )
-    langs = {r.doc_id: r.v for r in df.select("doc_id", detect_language("text").alias("v")).collect()}
+    langs = {r.doc_id: r.v for r in df.selectExpr("doc_id", f"{detect_language_sql('text')} AS v").collect()}
     assert langs == {1: "en", 2: "de", 3: "unknown"}
-    q = {r.doc_id: r.v for r in df.select("doc_id", quality_score("text").alias("v")).collect()}
+    q = {r.doc_id: r.v for r in df.selectExpr("doc_id", f"{quality_score_sql('text')} AS v").collect()}
     assert q[1] > q[3]
 
 

@@ -16,7 +16,7 @@ from taico_data_integration_spark.ops.transforms import (
     SURROGATE_NULL,
     comma_decimal,
     normalize_name,
-    surrogate_key,
+    surrogate_key_sql,
 )
 
 
@@ -62,7 +62,7 @@ def test_surrogate_key_matches_python(sc, col_a, col_b):
     n = min(len(col_a), len(col_b))
     rows = list(zip(col_a[:n], col_b[:n]))
     df = sc.createDataFrame(rows, "a string, b string")
-    got = [r.k for r in df.select(surrogate_key("a", "b").alias("k")).collect()]
+    got = [r.k for r in df.selectExpr(f"{surrogate_key_sql('a', 'b')} AS k").collect()]
     expected = [
         hashlib.md5(
             f"{a if a is not None else SURROGATE_NULL}-{b if b is not None else SURROGATE_NULL}".encode()

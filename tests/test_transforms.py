@@ -12,9 +12,9 @@ from taico_data_integration_spark.ops.transforms import (
     block_code_reformat,
     canonical_map,
     comma_decimal,
-    dual_format_timestamp,
+    dual_format_timestamp_sql,
     normalize_name,
-    surrogate_key,
+    surrogate_key_sql,
 )
 
 
@@ -31,7 +31,7 @@ def test_comma_decimal_parses_and_nulls_garbage(spark):
 def test_surrogate_key_matches_dbt_utils_semantics(spark):
     # dbt_utils 1.1.1: md5 of '-'-joined null-coalesced casts
     df = spark.createDataFrame([("x", None)], "a string, b string")
-    got = df.select(surrogate_key("a", "b").alias("k")).collect()[0].k
+    got = df.selectExpr(f"{surrogate_key_sql('a', 'b')} AS k").collect()[0].k
     expected = hashlib.md5(f"x-{SURROGATE_NULL}".encode()).hexdigest()
     assert got == expected
 
@@ -56,7 +56,7 @@ def test_dual_format_timestamp_by_length(spark):
     df = spark.createDataFrame(
         [Row(s="12/25/1998 10:30"), Row(s="12/25/01 10:30"), Row(s="garbage")]
     )
-    got = df.select(dual_format_timestamp("s").alias("v")).collect()
+    got = df.selectExpr(f"{dual_format_timestamp_sql('s')} AS v").collect()
     assert got[0].v.year == 1998
     assert got[1].v.year == 2001  # 'yy' pivots to 2000-2099
     assert got[2].v is None
